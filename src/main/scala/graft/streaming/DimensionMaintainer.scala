@@ -249,7 +249,15 @@ final class ObservedKeySet(
     spark, StructType.fromDDL(s"$keyCol $keyType"), stateDir, spillEvery,
     compactEvery)
 
-  def current: DataFrame = state.current
+  // The keys [[attachTo]] is back-filling: visible to `current` from before
+  // the back-fill reads its snapshot until they are durably registered.
+  @volatile private var pending: Option[DataFrame] = None
+
+  /** Registered keys, plus the keys of a batch in flight in [[attachTo]]. */
+  def current: DataFrame = pending match {
+    case Some(p) => state.current.unionByName(p)
+    case None => state.current
+  }
 
   def observeBatch(batch: DataFrame, batchId: Long): Unit = {
     observeBatchDelta(batch, batchId)
@@ -271,29 +279,44 @@ final class ObservedKeySet(
       other.select(col(otherKeyCol).as(keyCol)).distinct(),
       Seq(keyCol), "left_anti")
 
-  /** Attach key registration to a stream. `onNewKeys` fires — BEFORE the
-    * keys are durably registered — with each batch's newly observed keys;
-    * [[Topology.startKeyRegistration]] uses it to back-fill on-demand
-    * dimensions. The fire-then-register order makes a crash between the two
-    * replay-safe: the replayed batch recomputes the same delta (the keys
-    * are still unregistered) and re-fires, and back-fill via upsert is
-    * idempotent. Register-then-fire would lose the back-fill forever on a
-    * crash in between — the keys would already be in the set, so the replay
-    * sees an empty delta. */
+  /** Attach key registration to a stream. `onNewKeys` fires with each
+    * batch's newly observed keys; [[Topology.startKeyRegistration]] uses it
+    * to back-fill on-demand dimensions. Per batch, in this order:
+    *
+    *  1. the new keys become visible to [[current]] (an in-memory pending
+    *     frame unioned in), so an on-demand CDC batch planned from here on
+    *     applies their updates;
+    *  2. `onNewKeys` fires — the back-fill reads its snapshot only now, so
+    *     every update it misses arrives after step 1 and is applied by the
+    *     CDC stream (newest-wins makes the overlap idempotent);
+    *  3. the keys are registered durably ([[DurableState.appendDelta]]);
+    *  4. the pending frame is cleared.
+    *
+    * Firing before step 1 would drop, for good, an update that reaches the
+    * CDC stream between the back-fill's read and the registration: the
+    * semi-filter discards it and the back-fill never sees it. Registering
+    * durably before firing would lose the back-fill on a crash in between:
+    * the replayed batch would see no new keys. In this order a crash before
+    * step 3 is replay-safe — the keys are not yet durable, so the replayed
+    * batch recomputes the same delta and fires again. */
   def attachTo(stream: DataFrame, checkpoint: String,
       onNewKeys: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val delta = batch.select(col(keyCol)).distinct()
-          .join(current, Seq(keyCol), "left_anti")
+          .join(state.current, Seq(keyCol), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           if (delta.count() > 0L) {
+            pending = Some(delta)
             onNewKeys(delta, id)
             state.appendDelta(_ => delta)
             ()
           }
-        } finally delta.unpersist(blocking = false)
+        } finally {
+          pending = None
+          delta.unpersist(blocking = false)
+        }
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("update")

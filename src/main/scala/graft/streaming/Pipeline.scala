@@ -318,15 +318,9 @@ object Pipeline {
     * in `buffer` and is retried on every subsequent batch, emitting once its
     * dimension data has arrived (the reference's `missingDataList`
     * buffer-and-drain, `…/dodetl/stp/BeamStreamProcessor.scala:56-61,83-98`).
-    * `buffer`'s schema must equal the event schema.
-    *
-    * Failure ordering: the ready rows are materialized and handed to
-    * `writeBatch` BEFORE the buffer is mutated, so a `writeBatch` failure
-    * leaves the buffer exactly as the retried batch expects — no parked
-    * event is lost on retry or restart-from-checkpoint (with a durable
-    * buffer, pass `stateDir` to [[LateDataBuffer]]). The inverse order would
-    * drain events in a failed attempt that never emitted them. Emission is
-    * at-least-once across retries, `foreachBatch`'s contract. */
+    * `buffer`'s schema must equal the event schema. The single-dimension
+    * case of [[operationalQueryBufferedMulti]] (same output columns, same
+    * failure ordering). */
   def operationalQueryBuffered(
       events: DataFrame, tsCol: String,
       dim: () => DataFrame, streamKey: String, dimKey: String, dimCols: Seq[String],
@@ -334,39 +328,30 @@ object Pipeline {
       buffer: LateDataBuffer,
       delay: String = "10 minutes")(
       writeBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    withEventTimeWatermark(events, tsCol, delay).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val eventCols = batch.columns.toSeq
-        val retry = batch.unionByName(buffer.current)
-        val d = dim().select(
-          col(dimKey).as("_dim_key") +: lit(true).as("_matched") +: dimCols.map(col): _*)
-        val joined = retry
-          .join(d, retry(streamKey) === d("_dim_key"), "left")
-          .drop("_dim_key")
-        val ready = joined.filter(col("_matched")).drop("_matched")
-        val out = metricCols
-          .foldLeft(ready) { case (df, (n, c)) => df.withColumn(n, c) }
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          out.count() // materialize while the plan's buffer frame is live
-          writeBatch(out, id) // emit first: a throw here leaves the buffer intact
-          val missing = joined.filter(col("_matched").isNull)
-            .select(eventCols.map(col): _*)
-          buffer.replaceWith(missing)
-        } finally out.unpersist(blocking = false)
-      }
+    operationalQueryBufferedMulti(
+      events, tsCol, Seq(DimSpec("dim", dim, streamKey, dimKey, dimCols)),
+      metricCols, buffer, delay)(writeBatch)
 
-  /** Multi-dimension form of [[operationalQueryBuffered]] — the reference's
-    * actual buffering contract: an event is emitted only when ALL its
-    * dimension rows exist; if ANY is missing the event parks and every later
-    * batch retries it (`missingDataList` holds (event, missing-tables)
-    * pairs, `…/dodetl/stp/BeamStreamProcessor.scala:83-98`; per-event
-    * multi-table lookups `…/dodetl/stp/DataTransformer.scala:17-38`).
+  /** Multi-dimension buffered enrichment — the reference's actual buffering
+    * contract: an event is emitted only when ALL its dimension rows exist;
+    * if ANY is missing the event parks in `buffer` and every later batch
+    * retries it (`missingDataList` holds (event, missing-tables) pairs,
+    * `…/dodetl/stp/BeamStreamProcessor.scala:83-98`; per-event multi-table
+    * lookups `…/dodetl/stp/DataTransformer.scala:17-38`).
     *
     * All dimension joins are planned inside `foreachBatch` (live snapshots,
-    * see [[operationalQuery]]) as left joins + match markers; `ready` =
-    * every marker set. Same failure ordering as the single-dim form: emit
-    * before the buffer swap. */
+    * see [[operationalQuery]]) as left joins + match markers over
+    * `batch ∪ buffer`; that join is evaluated ONCE per micro-batch (persisted
+    * and counted), and both the ready rows (every marker set) and the
+    * still-missing rows are filtered from it.
+    *
+    * Failure ordering: the ready rows are handed to `writeBatch` BEFORE the
+    * buffer is mutated, so a `writeBatch` failure leaves the buffer exactly
+    * as the retried batch expects — no parked event is lost on retry or
+    * restart-from-checkpoint (with a durable buffer, pass `stateDir` to
+    * [[LateDataBuffer]]). The inverse order would drain events in a failed
+    * attempt that never emitted them. Emission is at-least-once across
+    * retries, `foreachBatch`'s contract. */
   def operationalQueryBufferedMulti(
       events: DataFrame, tsCol: String,
       dims: Seq[DimSpec],
@@ -375,6 +360,7 @@ object Pipeline {
       delay: String = "10 minutes")(
       writeBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(dims.nonEmpty, "at least one dimension required")
+    val matched = dims.indices.map(i => col(s"_matched_$i"))
     withEventTimeWatermark(events, tsCol, delay).writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val eventCols = batch.columns.toSeq
@@ -386,23 +372,19 @@ object Pipeline {
                 lit(true).as(s"_matched_$i") +: spec.dimCols.map(col): _*)
             acc.join(d, acc(spec.streamKey) === d(s"_dim_key_$i"), "left")
               .drop(s"_dim_key_$i")
-        }
-        val allMatched = dims.indices
-          .map(i => col(s"_matched_$i"))
-          .reduce(_ && _)
-        val ready = joined.filter(allMatched)
-          .drop(dims.indices.map(i => s"_matched_$i"): _*)
-        val out = metricCols
-          .foldLeft(ready) { case (df, (n, c)) => df.withColumn(n, c) }
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          out.count()
-          writeBatch(out, id)
-          val missing = joined
-            .filter(dims.indices.map(i => col(s"_matched_$i").isNull).reduce(_ || _))
-            .select(eventCols.map(col): _*)
-          buffer.replaceWith(missing)
-        } finally out.unpersist(blocking = false)
+          joined.count() // materialize while the plan's buffer frame is live
+          val ready = joined.filter(matched.reduce(_ && _))
+            .drop(dims.indices.map(i => s"_matched_$i"): _*)
+          // emit first: a throw here leaves the buffer intact
+          writeBatch(
+            metricCols.foldLeft(ready) { case (df, (n, c)) => df.withColumn(n, c) },
+            id)
+          buffer.replaceWith(
+            joined.filter(matched.map(_.isNull).reduce(_ || _))
+              .select(eventCols.map(col): _*))
+        } finally joined.unpersist(blocking = false)
       }
   }
 }

@@ -806,6 +806,37 @@ class StreamingSpec extends SparkSpec {
     } finally { qCdc.stop(); qKeys.stop(); qOp.stop() }
   }
 
+  test("J4: a CDC update landing between the back-fill's read and registration is applied") {
+    import spark.implicits._
+    val schema = StructType.fromDDL("k BIGINT, ord BIGINT, planned DOUBLE")
+    val dim = new DimensionMaintainer(spark, "dim_bf_window", Seq("k"), "ord", schema)
+    val keySet = new ObservedKeySet(spark, "k", "BIGINT")
+    val cdc = MemoryStream[(Long, Long, Double)](spark)
+    val qCdc = dim.attachToOnDemand(
+      cdc.toDF().toDF("k", "ord", "planned"), tmpDir("ckpt-bfw-cdc"),
+      () => keySet.current, "k")
+    // The back-fill reads the compacted topic while it holds ord 1 for k=7;
+    // right after that read, ord 2 reaches the topic and the CDC stream
+    // applies it — before the key-registration batch has returned.
+    val topicAtRead = Seq((7L, 1L, 10.0)).toDF("k", "ord", "planned")
+    def snapshot(): org.apache.spark.sql.DataFrame = {
+      cdc.addData(Seq((7L, 2L, 20.0)))
+      qCdc.processAllAvailable()
+      topicAtRead
+    }
+    val keyStream = MemoryStream[Long](spark)
+    val qKeys = keySet.attachTo(
+      keyStream.toDF().toDF("k"), tmpDir("ckpt-bfw-keys"),
+      onNewKeys = (nk, id) => dim.backfill(snapshot(), nk, "k", id))
+    try {
+      keyStream.addData(Seq(7L)); qKeys.processAllAvailable()
+      // newest-wins: the stream's ord 2 survives the back-fill's ord 1
+      assert(dim.current.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet == Set((7L, 2L, 20.0)))
+      assert(keySet.current.collect().map(_.getLong(0)).toSeq == Seq(7L))
+    } finally { qCdc.stop(); qKeys.stop() }
+  }
+
   test("lineage stays bounded across many state swaps (ObservedKeySet/DurableState)") {
     import spark.implicits._
     val keys = new ObservedKeySet(spark, "k", "BIGINT") // no stateDir: localCheckpoint path
